@@ -5,12 +5,13 @@ A from-scratch reimplementation of the capabilities of tensorflow/data-validatio
 
 * **Statistics phase** (distributed): one fused pass over a DataFrame computes
   per-column statistics — counts, presence/valency, min/max/mean/stddev,
-  approximate quantiles (t-digest sketches), top-k / unique counts
-  (count-min + HyperLogLog sketches), string/bytes stats, and semantic-domain
-  stats (image format histograms, natural-language heuristics, time formats).
-  Built-in Catalyst aggregate expressions cover everything they can express
-  (JVM-side, whole-stage codegen); mergeable sketch accumulators run as
-  Arrow-vectorized ``mapInArrow`` partials merged tree-wise.
+  approximate quantiles (``percentile_approx``), exact top-k / unique counts
+  or, in sketch mode, Spark's built-in ``approx_top_k`` / HyperLogLog sketch
+  aggregates, string/bytes stats, and semantic-domain stats (image format
+  histograms, natural-language heuristics, time formats). Built-in Catalyst
+  aggregate expressions cover everything they can express (JVM-side,
+  whole-stage codegen); only weighted quantiles use a Python weighted
+  t-digest, built per partition in ``mapInPandas`` and merged tree-wise.
 
 * **Validation phase** (driver-side): a declarative :class:`Schema` constraint
   spec is evaluated against the statistics artifact, emitting anomaly rows with

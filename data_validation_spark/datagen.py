@@ -185,7 +185,10 @@ def warm_session(spark) -> None:
     costs into the (untimed) setup phase, which is what a long-running
     cluster's steady state looks like.
     """
-    key = id(spark)
+    # application id + start time: unlike id(spark), never reused by a later
+    # session after this one is stopped and collected
+    sc = spark.sparkContext
+    key = (sc.applicationId, sc.startTime)
     if key in _WARMED:
         return
     _WARMED.add(key)
@@ -193,7 +196,6 @@ def warm_session(spark) -> None:
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        sc = spark.sparkContext
         cores = sc.defaultParallelism
         # hash agg + exchange + sort (codegen) and a window
         base = spark.range(0, 200_000, 1, max(cores, 8)).select(

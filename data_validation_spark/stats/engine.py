@@ -11,14 +11,17 @@ Execution shape (cf. SURVEY.md §3.1 "Spark shape"):
 
 2. **Long pass** — a stacked ``(slice, feature, value)`` projection feeding one
    groupBy shuffle for exact top-k / unique counts (the reference's
-   ``top_k_uniques_stats_generator``) and numeric stats of array elements.
+   ``top_k_uniques_stats_generator``) and numeric stats of array elements,
+   unioned with the percentile grids (and weighted digests) into one action.
 
 3. **Assembly** — driver-side transform of the tiny aggregate output into the
    ``DatasetStatsList`` artifact (histogram math in ``quantiles.py``).
 
-With ``options.use_sketches=True`` the long pass is replaced by a single
-Arrow-vectorized sketch pass (t-digest + count-min + HLL), mergeable
-accumulators combined tree-wise — see ``sketches/runner.py``.
+``options.use_sketches=True`` swaps one branch of the long pass: without a
+weight column, top-k and unique counts come from Spark's built-in
+``approx_top_k`` / ``hll_sketch_agg`` aggregates instead of the exact shuffle
+(``sketches/runner.py``). Every numeric statistic is computed the same way in
+both modes — quantiles are a ``percentile_approx`` sketch either way.
 """
 
 from __future__ import annotations
@@ -117,22 +120,10 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
         _QUANTILE_CUTS,
         options.quantiles_accuracy,
         options.num_values_histogram_buckets,
-        # sketch mode computes quantiles via t-digest in the sketch pass
-        include_quantiles=not options.use_sketches,
     )
 
     def wide_job():
         return df.groupBy(slice_col.alias("slice_key")).agg(*agg_exprs).collect()
-
-    def quant_job():
-        # percentile_approx grids can't share the wide agg: they'd force it
-        # into ObjectHashAggregate (no codegen). SKETCH mode runs them as
-        # their own column-pruned job (num-values histograms only — the
-        # quantile grids ride the sketch pass); EXACT mode folds them into
-        # the fused long union instead (see _run_long_pass).
-        if not quant_exprs or not options.use_sketches:
-            return []
-        return df.groupBy(slice_col.alias("slice_key")).agg(*quant_exprs).collect()
 
     def bytes_job():
         # ALL binary-column stats (presence, lengths, HLL unique, format
@@ -149,13 +140,10 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
         return src.groupBy("slice_key").agg(*aggs).collect()
 
     def long_job():
-        if options.use_sketches:
-            from data_validation_spark.stats.sketches.runner import run_sketch_pass
-
-            return (*run_sketch_pass(df, plans, slice_col, options), {}, {})
-        # Exact mode: top-k/uniques + array-element stats + percentile grids
-        # + (when a weight column is set) weighted t-digest quantiles, all
-        # in ONE action — see _run_long_pass.
+        # top-k/uniques + array-element stats + percentile grids + (when a
+        # weight column is set) weighted t-digest quantiles, all in ONE
+        # action — see _run_long_pass. percentile_approx grids can't share
+        # the wide agg: they'd force it into ObjectHashAggregate (no codegen).
         return _run_long_pass(df, plans, slice_col, options, quant_exprs,
                               weight_arg=weight_arg)
 
@@ -231,15 +219,13 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
             y_boundaries=options.lift_y_boundaries,
         ).collect()
 
-    with ThreadPoolExecutor(max_workers=6) as pool:
+    with ThreadPoolExecutor(max_workers=5) as pool:
         wide_f = pool.submit(wide_job)
-        quant_f = pool.submit(quant_job)
         bytes_f = pool.submit(bytes_job)
         long_f = pool.submit(long_job)
         gen_f = pool.submit(custom_gen_job)
         lift_f = pool.submit(lift_job)
         wide_rows = wide_f.result()
-        quant_rows = quant_f.result()
         bytes_rows = bytes_f.result()
         (topk_data, uniq_data, arr_data, wtopk_data, wq_data,
          quant_long) = long_f.result()
@@ -250,10 +236,8 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
         # Placeholder-for-empty-input parity (stats_impl.py:141-158).
         return DatasetStatsList([DatasetStats(options.default_slice_key, 0, features={})])
 
-    quant_by_slice = {r["slice_key"]: r.asDict() for r in quant_rows}
-    for r in bytes_rows:  # binary-column stats, keyed by the same aliases
-        quant_by_slice.setdefault(r["slice_key"], {}).update(r.asDict())
-    for sk, grids in quant_long.items():  # exact mode: grids from the union
+    quant_by_slice = {r["slice_key"]: r.asDict() for r in bytes_rows}
+    for sk, grids in quant_long.items():  # percentile grids from the union
         quant_by_slice.setdefault(sk, {}).update(grids)
 
     # ---- assembly ----------------------------------------------------------
@@ -303,9 +287,14 @@ def _want_topk(p: E.ColumnPlan, options: StatsOptions) -> bool:
 
 def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None,
                    weight_arg=None):
-    """Exact top-k/uniques + array-element numeric stats + percentile grids
+    """Top-k/uniques + array-element numeric stats + percentile grids
     + (when a weight column is configured) weighted t-digest quantiles —
     ONE Spark action.
+
+    Only the top-k/uniques branch depends on ``options.use_sketches``: an
+    unweighted sketch-mode run ranks with the built-in sketch aggregates of
+    ``sketches.runner.run_sketch_pass``; every other run takes the exact
+    salted-window branch below (``approx_top_k`` takes no weights).
 
     Each concern builds a small (KB-scale) lazy result frame; their union is
     collected once. Catalyst compiles the union into column-disjoint
@@ -313,11 +302,12 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
     for array stats, scalar numeric columns for the percentile grids,
     numeric + weight columns for the weighted digests (plan-asserted in
     tests/test_plans.py) — so the long pass reads each table column at most
-    once and exact mode submits exactly TWO jobs (wide agg + this union).
-    Round 4 ran the weighted digest and the percentile grids as separate
-    concurrent jobs; at 100 TB each was an extra scan wave. The grid branch
-    is the only ObjectHashAggregate (percentile_approx) and it is isolated
-    in its own union branch, so the other branches keep WholeStageCodegen."""
+    once and a run submits exactly TWO jobs (wide agg + this union), in
+    either mode. Round 4 ran the weighted digest and the percentile grids as
+    separate concurrent jobs; at 100 TB each was an extra scan wave. The
+    ObjectHashAggregates (percentile_approx grids; in sketch mode also the
+    sketch top-k) are each isolated in their own union branch, so the other
+    branches keep WholeStageCodegen."""
     long_df = E.long_format(
         df, plans, slice_col,
         weight_arg if weight_arg is not None else options.weight_column,
@@ -337,7 +327,13 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
     weighted = bool(options.weight_column)
     k = max(options.num_top_values, options.num_rank_histogram_buckets)
 
-    if any_topk:
+    if any_topk and options.use_sketches and not weighted:
+        from data_validation_spark.stats.sketches.runner import run_sketch_pass
+
+        finals.append(
+            run_sketch_pass(long_df, options).select(F.lit("topk").alias("kind"), "*")
+        )
+    elif any_topk:
         counts = (
             long_df.where(F.col("str_value").isNotNull())
             .groupBy("slice_key", "feature", "str_value")
@@ -399,7 +395,6 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
         )
 
     if any_arr:
-        qs = [i / _QUANTILE_CUTS for i in range(_QUANTILE_CUTS + 1)]
         nv = F.col("num_value")
         finite = F.when(~nv.isin(float("inf"), float("-inf")), nv)
         finals.append(
@@ -419,7 +414,9 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
                 F.min(finite).alias("finmin"),
                 F.max(finite).alias("finmax"),
                 F.count(finite).alias("fincnt"),
-                F.percentile_approx(finite, qs, options.quantiles_accuracy).alias("quants"),
+                F.percentile_approx(
+                    finite, E.quantile_grid(_QUANTILE_CUTS), options.quantiles_accuracy
+                ).alias("quants"),
             )
             .select(F.lit("arr").alias("kind"), "*")
         )
@@ -594,8 +591,6 @@ def _assemble_feature(
             num.finite_max = _g(rd, p, "finmax", num.max if math.isfinite(num.max) else None)
             quants = _g(rd, p, "quants")
             finite_count = nonmissing - num.num_nan - num.num_pos_inf - num.num_neg_inf
-            if quants is None and key in arr_data:  # sketch mode: t-digest quantiles
-                quants = arr_data[key]["quants"]
             if options.weight_column:
                 w_cnt = _g(rd, p, "w_cnt", 0.0) or 0.0
                 w_sum = _g(rd, p, "w_sum", 0.0) or 0.0
@@ -656,12 +651,8 @@ def _assemble_feature(
         # Weighted quantile stats (reference WeightedNumericStatistics median +
         # [weighted equi-width, weighted quantiles] histograms,
         # basic_stats_generator.py:838-876) — emitted when a weight column is
-        # configured and the sketch pass produced a weighted t-digest grid.
-        wdata = None
-        if options.weight_column:
-            # sketch mode: weighted grid lives in arr_data; exact mode: in
-            # the dedicated weighted-quantile pass output
-            wdata = (wq_data or {}).get(key) or arr_data.get(key)
+        # configured and the long pass produced a weighted t-digest grid.
+        wdata = wq_data.get(key) if options.weight_column else None
         if wdata and wdata.get("wquants") is not None:
             wq = wdata["wquants"]
             wfin = wdata["wfcnt"]

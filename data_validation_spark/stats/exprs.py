@@ -17,6 +17,7 @@ extrema are tracked separately; quantiles are computed over finite values only.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -116,13 +117,20 @@ def _value_col(p: ColumnPlan):
     return c
 
 
+def quantile_grid(cuts: int):
+    """``array(0, 1/cuts, ..., 1)`` percentage literal for ``percentile_approx``.
+    Build it once per call site and reuse the Column: passing a Python list
+    re-creates the ``cuts + 1`` literals (one py4j round trip each) for
+    every column."""
+    return F.array(*(F.lit(i / cuts) for i in range(cuts + 1)))
+
+
 def build_agg_exprs(
     plans: list[ColumnPlan],
     weight_column: Optional[str],
     num_quantile_cuts: int,
     quantiles_accuracy: int,
     count_values_hist_buckets: int,
-    include_quantiles: bool = True,
 ) -> tuple[list, list]:
     """Aggregate expressions for the wide pass, split into two lists:
 
@@ -175,7 +183,8 @@ def build_agg_exprs(
     if global_w:
         exprs.append(F.sum(F.col(global_w).cast("double")).alias("weighted_num_examples"))
 
-    qs = [i / num_quantile_cuts for i in range(num_quantile_cuts + 1)]
+    # one percentage Column per grid size, built on first use
+    grid = functools.cache(quantile_grid)
 
     for p in plans:
         a = p.alias
@@ -245,9 +254,7 @@ def build_agg_exprs(
             ]
             qexprs.append(
                 F.percentile_approx(
-                    sz.cast("double"),
-                    [i / count_values_hist_buckets for i in range(count_values_hist_buckets + 1)],
-                    quantiles_accuracy,
+                    sz.cast("double"), grid(count_values_hist_buckets), quantiles_accuracy
                 ).alias(f"{a}__valshist")
             )
             pw = _w(p)
@@ -346,8 +353,10 @@ def build_agg_exprs(
                 exprs.append(
                     F.avg(F.length(v.cast("string"))).alias(f"{a}__avglen")
                 )
-            if include_quantiles:
-                qexprs.append(F.percentile_approx(xf, qs, quantiles_accuracy).alias(f"{a}__quants"))
+            qexprs.append(
+                F.percentile_approx(xf, grid(num_quantile_cuts), quantiles_accuracy)
+                .alias(f"{a}__quants")
+            )
             if p.is_float:
                 exprs += [
                     F.sum(F.when(F.isnan(x), 1).otherwise(0)).alias(f"{a}__nan"),
@@ -414,8 +423,9 @@ def long_format(df, plans: list[ColumnPlan], slice_col, weight_column: Optional[
                 # (top_k_uniques_sketch_stats_generator.py:211-222); the
                 # exact generator and the KMV uniques sketch see raw values,
                 # so collapsing here would undercount exact uniques and
-                # diverge exact top-k. The sketch runner applies it
-                # Python-side to its top-k inserts only.
+                # diverge exact top-k. The sketch branch applies it as an
+                # expression on its top-k input only
+                # (sketches/runner.run_sketch_pass).
                 sv = v.cast("string")
             else:
                 sv = F.lit(None).cast("string")

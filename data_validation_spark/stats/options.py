@@ -24,13 +24,19 @@ class StatsOptions:
     num_values_histogram_buckets: int = 10
 
     # Approximation knobs (reference: eps=0.01 quantiles; MG 1024; KMV 16384).
-    # 1/eps for percentile_approx; reference eps=0.01 ⇒ 100 — default 2× that
-    quantiles_accuracy: int = 200
-    tdigest_compression: int = 200
+    # 1/eps for percentile_approx — Spark's default 10000. Its answer can sit
+    # up to eps·n ranks below the target, so at 1/eps = 200 the median of a
+    # discrete column (e.g. integers 1..50) often lands one value low.
+    quantiles_accuracy: int = 10_000
+    tdigest_compression: int = 200  # weighted-quantile t-digest
     topk_sketch_size: int = 1024
     hll_precision: int = 14  # 2^14 = 16384 registers
 
-    # Strategy: exact top-k/uniques (shuffle groupBy) vs sketches (one pass).
+    # Strategy for top-k/uniques only: exact (shuffle groupBy) vs Spark's
+    # built-in approx_top_k / hll_sketch_agg sketches. All other statistics
+    # are computed the same way in both modes. With a weight column, top-k
+    # is ranked exactly over raw values (no __LARGE_BYTES__ placeholder) in
+    # both modes: approx_top_k takes no weights.
     use_sketches: bool = False
 
     # Which columns get string-stats (top-k/uniques) even though numeric.

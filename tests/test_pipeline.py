@@ -93,3 +93,48 @@ def test_pipeline_nl_constraints_on_caption(spark):
     r2 = validate_images(spark, df, schema)
     types = {a.type.value for a in r2.anomalies.anomalies}
     assert "SEQUENCE_VALUE_TOO_SMALL_FRACTION" in types
+
+
+def test_warm_session_reruns_for_a_new_session(tmp_path):
+    # warm_session's memo must not outlive the session it warmed: after a
+    # stop and a fresh session in the same process, warm-up runs again.
+    # Runs in its own interpreter so stopping a session leaves the suite's
+    # shared session alone; the warm-up work itself is replaced by a
+    # counter on a session stand-in.
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = """
+import sys
+sys.path.insert(0, %r)
+from data_validation_spark import datagen
+from data_validation_spark.session import get_spark
+
+runs = []
+
+class Probe:
+    def __init__(self, spark):
+        self.sparkContext = spark.sparkContext
+
+    def range(self, *args, **kwargs):
+        runs.append(1)
+        raise RuntimeError("warm-up body reached")
+
+s = get_spark("warm-a", master="local[1]", shuffle_partitions=1)
+probe = Probe(s)
+datagen.warm_session(probe)
+datagen.warm_session(probe)
+s.stop()
+s = get_spark("warm-b", master="local[1]", shuffle_partitions=1)
+# same Python object for the new session: what id() reuse after GC does
+probe.sparkContext = s.sparkContext
+datagen.warm_session(probe)
+s.stop()
+print("RUNS", len(runs))
+""" % repo
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    r = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True,
+                       cwd=str(tmp_path), env=env, timeout=300)
+    assert "RUNS 2" in r.stdout, r.stdout + r.stderr

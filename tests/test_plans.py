@@ -260,3 +260,60 @@ def test_exact_weighted_long_pass_fused(spark, tmp_path):
         [{"s", "w"}, {"x"}, {"x", "w"}], key=sorted
     ), colsets
     assert "ObjectHashAggregate" in plan  # the isolated grid branch
+
+
+def _sql_executions(spark, fn):
+    """Run ``fn``; return its result and the physical plans of the SQL
+    executions it started, read from the session's SQL status store (filled
+    with the UI off)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    start = store.executionsCount()
+    result = fn()
+    bus.waitUntilEmpty()
+    it = store.executionsList(start, store.executionsCount() - start).iterator()
+    plans = []
+    while it.hasNext():
+        plans.append(it.next().physicalPlanDescription())
+    return result, plans
+
+
+def test_sketch_mode_plan_has_no_python_stage(spark, tmp_path):
+    """Unweighted sketch mode ranks top-k and uniques with Spark's built-in
+    sketch aggregates: no executed plan of the run holds a Python eval or
+    pandas node. The weighted sketch run (exact weighted top-k plus the
+    Python weighted digest) still submits a single long-pass job beside the
+    wide agg."""
+    from pyspark.sql import functions as F
+
+    from data_validation_spark.stats.engine import compute_statistics
+    from data_validation_spark.stats.options import StatsOptions
+
+    df = spark.range(2000).select(
+        F.col("id").cast("double").alias("x"),
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("xs"),
+        F.concat(F.lit("v"), (F.col("id") % 13).cast("string")).alias("s"),
+        (F.rand(5) + 0.5).alias("w"),
+    )
+    p = str(tmp_path / "sk.parquet")
+    df.write.parquet(p)
+    src = spark.read.parquet(p)
+    python_nodes = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython",
+                    "BatchEvalPython")
+
+    stats, plans = _sql_executions(spark, lambda: compute_statistics(
+        src.select("x", "xs", "s"), StatsOptions(use_sketches=True)))
+    assert stats.default_slice().feature("s").string.unique == 13
+    assert len(plans) == 2, plans  # wide agg + long pass
+    for plan in plans:
+        for node in python_nodes:
+            assert node not in plan, (node, plan)
+    long_plan = next(pl for pl in plans if "approx_top_k" in pl)
+    assert "hll_sketch_agg" in long_plan
+
+    _, plans = _sql_executions(spark, lambda: compute_statistics(
+        src, StatsOptions(use_sketches=True, weight_column="w")))
+    assert len(plans) == 2, plans
+    with_python = [pl for pl in plans if any(n in pl for n in python_nodes)]
+    assert len(with_python) == 1  # the long pass carries the weighted digest

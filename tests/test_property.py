@@ -147,26 +147,6 @@ def test_tdigest_weighted_quantile_envelope(pairs):
     assert above <= (0.5 + eps) * W + 1e-9
 
 
-# ------------------------------------------------------------------ HLL -----
-@SET
-@given(st.integers(min_value=1, max_value=3000), st.integers(min_value=2, max_value=4))
-def test_hll_merge_union_bound(n, splits):
-    from data_validation_spark.stats.sketches.hll import HyperLogLog
-
-    vals = [f"v{i}" for i in range(n)]
-    parts = [HyperLogLog() for _ in range(splits)]
-    for i, v in enumerate(vals):
-        parts[i % splits].add([v])
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.merge(p)
-    one = HyperLogLog()
-    one.add(vals)
-    # merge of disjoint splits must estimate the SAME set as one-shot
-    assert merged.estimate() == one.estimate()
-    assert abs(merged.estimate() - n) <= max(0.05 * n, 2)
-
-
 # ---------------------------------------------------------------- drift -----
 @SET
 @given(
@@ -265,44 +245,6 @@ def test_decoders_reject_garbage_without_crashing(data):
     codec.decode(data)
     jc.decode(data)
     codec.dimensions(data)
-
-
-# ------------------------------------------------------------- count-min ----
-@SET
-@given(
-    st.dictionaries(
-        st.text(alphabet="abcdefghij", min_size=1, max_size=4),
-        st.integers(min_value=1, max_value=10_000),
-        min_size=1,
-        max_size=60,
-    ),
-    st.integers(min_value=2, max_value=4),
-)
-def test_cms_never_underestimates_and_merge_adds(counts, splits):
-    from data_validation_spark.stats.sketches.countmin import CountMinTopK
-
-    values = list(counts)
-    arr = np.array([counts[v] for v in values], dtype=np.float64)
-    one = CountMinTopK()
-    one.add_counts(values, arr)
-    # count-min property: estimate >= true count, total exact
-    est = one.estimate(values)
-    assert (est >= arr - 1e-9).all()
-    assert one.total == pytest.approx(arr.sum())
-
-    parts = [CountMinTopK() for _ in range(splits)]
-    for i, v in enumerate(values):
-        parts[i % splits].add_counts([v], arr[i : i + 1])
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.merge(p)
-    mest = merged.estimate(values)
-    assert (mest >= arr - 1e-9).all()
-    assert merged.total == pytest.approx(arr.sum())
-    # top-1 under distinct counts is exact when the max is unique and large
-    top_v = values[int(np.argmax(arr))]
-    if (arr == arr.max()).sum() == 1 and arr.max() >= 2 * np.sort(arr)[-2:][0]:
-        assert merged.top_k(1)[0][0] == top_v
 
 
 # --------------------------------------------------- histogram-JSD bounds ---

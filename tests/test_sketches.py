@@ -1,14 +1,14 @@
 """Sketch-layer tests — three-way accumulate/merge/compact parity per the
 reference's harness pattern (tdv/utils/test_util.py:276-389): (a) one
 accumulator per batch then merge, (b) merge then compact, (c) sequential adds
-into one accumulator must all agree within tolerance.
+into one accumulator must all agree within tolerance. Sketch-mode top-k and
+uniques run on Spark's built-in sketch aggregates and are checked at engine
+level against exact mode.
 """
 
 import numpy as np
 import pytest
 
-from data_validation_spark.stats.sketches.countmin import CountMinTopK
-from data_validation_spark.stats.sketches.hll import HyperLogLog
 from data_validation_spark.stats.sketches.tdigest import TDigest
 
 
@@ -68,65 +68,6 @@ def test_tdigest_ignores_nonfinite():
     assert td.quantile(0.5) == pytest.approx(2.0, abs=1.0)
 
 
-# ------------------------------------------------------------------ count-min
-def test_cms_topk_exactish():
-    rng = np.random.RandomState(2)
-    # zipf-ish: value v_i with count ~ 1000/i
-    values, counts = [], []
-    for i in range(1, 200):
-        values.append(f"v{i:03d}")
-        counts.append(max(1000 // i, 1))
-    cms = CountMinTopK()
-    order = rng.permutation(len(values))
-    cms.add_counts([values[i] for i in order], np.array([counts[i] for i in order]))
-    top = cms.top_k(5)
-    assert [t[0] for t in top] == ["v001", "v002", "v003", "v004", "v005"]
-    assert top[0][1] == pytest.approx(1000, rel=0.01)
-
-
-def test_cms_merge_parity():
-    a = CountMinTopK()
-    b = CountMinTopK()
-    a.add_counts(["x", "y"], np.array([100, 50]))
-    b.add_counts(["x", "z"], np.array([30, 70]))
-    m = a.merge(b)
-    top = dict(m.top_k(10))
-    assert top["x"] == pytest.approx(130, rel=0.02)
-    assert top["z"] == pytest.approx(70, rel=0.02)
-    assert m.total == pytest.approx(250)
-
-
-def test_cms_tie_break_larger_value_first():
-    cms = CountMinTopK()
-    cms.add_counts(["a", "b", "c"], np.array([5, 5, 9]))
-    top = cms.top_k(3)
-    assert top[0][0] == "c"
-    assert [t[0] for t in top[1:]] == ["b", "a"]  # tie → larger value first
-
-
-# ------------------------------------------------------------------ HLL
-def test_hll_estimate():
-    hll = HyperLogLog()
-    vals = [f"item{i}" for i in range(10_000)]
-    hll.add(vals)
-    assert hll.estimate() == pytest.approx(10_000, rel=0.03)
-
-
-def test_hll_merge():
-    a = HyperLogLog()
-    b = HyperLogLog()
-    a.add([f"a{i}" for i in range(5000)])
-    b.add([f"a{i}" for i in range(2500, 7500)])
-    m = a.merge(b)
-    assert m.estimate() == pytest.approx(7500, rel=0.03)
-
-
-def test_hll_small_range():
-    hll = HyperLogLog()
-    hll.add(["x", "y", "z", "x"])
-    assert hll.estimate() == 3
-
-
 # ----------------------------------------------------------- engine parity
 def test_sketch_mode_vs_exact(spark):
     rows = [(float(i % 100), f"k{i % 7}") for i in range(10_000)]
@@ -150,6 +91,47 @@ def test_sketch_mode_vs_exact(spark):
     # histograms exist in sketch mode too
     assert sx.histogram("STANDARD") is not None
     assert sx.histogram("STANDARD").total_count() == pytest.approx(10_000, rel=0.01)
+
+
+def _string_stats(df, **opts):
+    from data_validation_spark.stats.engine import compute_statistics
+    from data_validation_spark.stats.options import StatsOptions
+
+    return compute_statistics(df, StatsOptions(**opts)).default_slice().feature("s").string
+
+
+def test_sketch_topk_ties_go_to_larger_value(spark):
+    # count descending, equal counts → larger value first (exact generator
+    # order, top_k_uniques_stats_generator.py)
+    rows = [("a",)] * 5 + [("b",)] * 5 + [("c",)] * 9 + [("d",)] * 1
+    df = spark.createDataFrame(rows, "s string")
+    st = _string_stats(df, use_sketches=True)
+    assert st.top_values == [("c", 9.0), ("b", 5.0), ("a", 5.0), ("d", 1.0)]
+    assert st.rank_histogram == _string_stats(df).rank_histogram
+
+
+def test_sketch_uniques_exact_at_small_cardinality(spark):
+    for n in (1, 2, 37, 500):
+        df = spark.createDataFrame([(f"u{i % n}",) for i in range(2 * n + 3)], "s string")
+        assert _string_stats(df, use_sketches=True).unique == n
+
+
+def test_sketch_mode_repartitioned_matches_exact(spark):
+    # Per-partition sketches merged by Spark's partial aggregation must give
+    # the single-pass answer: same top-k (values, counts, order) and uniques
+    # as the exact shuffle at this cardinality.
+    rows = [(f"k{(i * 7) % 23}", f"v{i % 301}") for i in range(6000)]
+    df = spark.createDataFrame(rows, "s string, t string").repartition(8)
+    from data_validation_spark.stats.engine import compute_statistics
+    from data_validation_spark.stats.options import StatsOptions
+
+    exact = compute_statistics(df, StatsOptions()).default_slice()
+    sketch = compute_statistics(df, StatsOptions(use_sketches=True)).default_slice()
+    for name in ("s", "t"):
+        es, ss = exact.feature(name).string, sketch.feature(name).string
+        assert ss.unique == es.unique
+        assert ss.top_values == es.top_values
+        assert ss.rank_histogram == es.rank_histogram
 
 
 # ------------------------------------------------- weighted quantile sketch
@@ -257,35 +239,51 @@ def test_weighted_sketch_quantiles_engine(spark):
 
 
 def test_fanout_merge_tier_activates_and_preserves_results(spark, monkeypatch):
-    # Two-tier salted merge (the explicit hot-key fanout,
-    # stats_impl.py:296-303 CombinePerKey-with-fanout analogue): force the
-    # tier on by lowering the threshold below the input's partition count and
-    # assert (a) it activated and (b) sketch results are unchanged vs the
-    # single-tier path — merge must be associative across the salt split.
-    from data_validation_spark.stats import sketches
+    # Two-tier salted merge of the weighted-digest branch (the explicit
+    # hot-key fanout, stats_impl.py:296-303 CombinePerKey-with-fanout
+    # analogue): force the tier on by lowering the threshold below the
+    # input's partition count and assert (a) it activated — a second
+    # grouped-pandas merge node in the long pass's plan — and (b) results are
+    # unchanged vs the single-tier path: merge must be associative across the
+    # salt split.
+    from data_validation_spark.stats import engine
     from data_validation_spark.stats.engine import compute_statistics
     from data_validation_spark.stats.options import StatsOptions
     from data_validation_spark.stats.sketches import runner
 
-    rows = [(float(i % 100), f"k{i % 11}") for i in range(8000)]
-    df = spark.createDataFrame(rows, "x double, s string").repartition(8)
+    rows = [(float(i % 100), f"k{i % 11}", 1.0 + (i % 3)) for i in range(8000)]
+    df = spark.createDataFrame(rows, "x double, s string, w double").repartition(8)
+    opts = StatsOptions(weight_column="w", use_sketches=True)
 
-    base = compute_statistics(df, StatsOptions(use_sketches=True))
-    assert runner.run_sketch_pass.last_used_fanout is False
+    def run():
+        engine.CAPTURE_UNION_FRAME = True
+        try:
+            stats = compute_statistics(df, opts)
+            plan = engine._last_union_frame._jdf.queryExecution().optimizedPlan().toString()
+        finally:
+            engine.CAPTURE_UNION_FRAME = False
+            engine._last_union_frame = None
+        return stats, plan.count("FlatMapGroupsInPandas")
+
+    base, base_merges = run()
+    assert base_merges == 1
 
     monkeypatch.setattr(runner, "FANOUT_THRESHOLD", 2)
-    fanned = compute_statistics(df, StatsOptions(use_sketches=True))
-    assert runner.run_sketch_pass.last_used_fanout is True
+    fanned, fanned_merges = run()
+    assert fanned_merges == 2
 
+    x, w = np.array([r[0] for r in rows]), np.array([r[2] for r in rows])
     for stats in (base, fanned):
         n = stats.default_slice().feature("x").numeric
         s = stats.default_slice().feature("s").string
         assert n.min == 0.0 and n.max == 99.0
-        assert n.mean == pytest.approx(49.5, abs=0.5)
+        assert n.weighted_mean == pytest.approx(float((x * w).sum() / w.sum()), rel=1e-9)
+        assert n.weighted_median == pytest.approx(_np_weighted_quantile(x, w, 0.5), abs=1.0)
         assert s.unique == 11
-    assert fanned.default_slice().feature("x").numeric.median == pytest.approx(
-        base.default_slice().feature("x").numeric.median, abs=1.0
-    )
+    fn, bn = fanned.default_slice().feature("x").numeric, base.default_slice().feature("x").numeric
+    assert fn.weighted_median == pytest.approx(bn.weighted_median, abs=1.0)
+    for h_f, h_b in zip(fn.weighted_histograms, bn.weighted_histograms):
+        assert h_f.total_count() == pytest.approx(h_b.total_count(), rel=1e-9)
     assert dict(fanned.default_slice().feature("s").string.top_values) == (
         dict(base.default_slice().feature("s").string.top_values)
     )
