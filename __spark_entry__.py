@@ -47,8 +47,10 @@ def _local_df(spark, rows, ddl) -> DataFrame:
     if not isinstance(ddl, str) or not rows:
         return spark.createDataFrame(rows, ddl)
     import pandas as pd
+    from pyspark.sql.types import StructType
 
-    names = [part.strip().split()[0] for part in ddl.split(",")]
+    # Splitting the DDL on "," would also split "decimal(12,2)".
+    names = StructType.fromDDL(ddl).fieldNames()
     pdf = pd.DataFrame([tuple(r) for r in rows], columns=names)
     return spark.createDataFrame(pdf, schema=ddl)
 

@@ -51,8 +51,6 @@ from data_validation_spark.stats.result import (
     StringStats,
 )
 
-_QUANTILE_CUTS = 100  # fine grid size; 10× the default 10 histogram buckets
-
 # Test hook: when True, _run_long_pass records its fused union frame in
 # _last_union_frame for plan assertions. Off by default — retaining the
 # frame would pin its lineage (and the source DataFrame) in module state
@@ -117,7 +115,7 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
     agg_exprs, quant_exprs, bytes_exprs = E.build_agg_exprs(
         plans,
         weight_arg,
-        _QUANTILE_CUTS,
+        E.QUANTILE_CUTS,
         options.quantiles_accuracy,
         options.num_values_histogram_buckets,
     )
@@ -415,7 +413,9 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
                 F.max(finite).alias("finmax"),
                 F.count(finite).alias("fincnt"),
                 F.percentile_approx(
-                    finite, E.quantile_grid(_QUANTILE_CUTS), options.quantiles_accuracy
+                    finite,
+                    E.quantile_grid(E.QUANTILE_CUTS),
+                    options.quantiles_accuracy,
                 ).alias("quants"),
             )
             .select(F.lit("arr").alias("kind"), "*")

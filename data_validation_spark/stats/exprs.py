@@ -117,6 +117,12 @@ def _value_col(p: ColumnPlan):
     return c
 
 
+# Fine quantile grid size shared by the unweighted (``percentile_approx``) and
+# weighted (t-digest) paths, so both histograms rebucket the same grid; 10×
+# the default 10 histogram buckets.
+QUANTILE_CUTS = 100
+
+
 def quantile_grid(cuts: int):
     """``array(0, 1/cuts, ..., 1)`` percentage literal for ``percentile_approx``.
     Build it once per call site and reuse the Column: passing a Python list

@@ -17,7 +17,9 @@ methods 1 and 2). Output is in bits.
 The reference leans on sklearn KDTree/NearestNeighbors and scipy digamma;
 neither ships in this image, so the neighbor searches are chunked
 brute-force Chebyshev kernels (O(n^2) time, O(chunk*n) memory) and digamma
-is a vectorized recurrence + asymptotic expansion. This is sized for the
+is a vectorized recurrence + asymptotic expansion. They are the package's
+only kNN/digamma kernels: ``mi.kraskov_mi`` and the sklearn-parity
+estimators in [[mi_sklearn]] call them too. This is sized for the
 per-partition samples (a few thousand rows) that the partitioned stats
 harness feeds it — the same regime the reference runs these estimators in
 (each Beam partition computes MI on its own sample;
@@ -620,8 +622,6 @@ def estimated_mixed_mi(
     cols = list(features0) + list(features1) + ([weight_col] if weight_col else [])
 
     def fn(pdf: pd.DataFrame) -> dict:
-        if len(pdf) > max_rows_per_partition:
-            pdf = pdf.sample(n=max_rows_per_partition, random_state=0)
         fl0 = [pdf[c].to_numpy() for c in features0]
         fl1 = [pdf[c].to_numpy() for c in features1]
         w = pdf[weight_col].to_numpy() if weight_col else None
@@ -633,6 +633,10 @@ def estimated_mixed_mi(
         return {"mixed_mi_bits": float(val)}
 
     out = partitioned_stats(
-        df.select(*cols), fn, num_partitions=num_partitions, seed=seed
+        df.select(*cols),
+        fn,
+        num_partitions=num_partitions,
+        seed=seed,
+        max_rows_per_partition=max_rows_per_partition,
     )
     return out["mixed_mi_bits"]

@@ -29,8 +29,6 @@ from pyspark.sql import functions as F
 from data_validation_spark.stats import exprs as E
 from data_validation_spark.stats.sketches.tdigest import TDigest
 
-_QUANTILE_CUTS = 100
-
 # Reference parity (top_k_uniques_sketch_stats_generator.py:49-50,211-222,
 # constants.py): values >1024 bytes collapse to one placeholder token in the
 # TOP-K sketch only — the uniques sketch and the exact generator always see
@@ -199,7 +197,7 @@ def decode_weighted_digest(acc_bytes) -> dict:
     """Driver-side decode of one merged weighted-digest row into the
     ``{wquants, wfcnt, wfsum, wfsumsq, wposinf, wneginf}`` dict consumed by
     engine._assemble_feature."""
-    qs = [i / _QUANTILE_CUTS for i in range(_QUANTILE_CUTS + 1)]
+    qs = [i / E.QUANTILE_CUTS for i in range(E.QUANTILE_CUTS + 1)]
     acc: FeatureAccumulator = pickle.loads(bytes(acc_bytes))
     return {
         "wquants": acc.wtd.quantiles(qs) if acc.fincnt else None,

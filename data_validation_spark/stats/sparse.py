@@ -157,19 +157,28 @@ def partitioned_stats(
     num_partitions: int = 10,
     seed: int = 42,
     min_partitions_stat_presence: int = 1,
+    max_rows_per_partition: int | None = None,
 ) -> dict[str, dict]:
     """Run ``fn(pdf) → {stat: value}`` on each of ``num_partitions`` random
     row partitions; summarize each stat with min/max/mean/median/std across
     partitions. The Spark shape of the reference's PartitionedStatsFn;
     ``min_partitions_stat_presence`` drops stats reported by fewer
     partitions (partitioned_stats_generator.py:52-63 get_valid_statistics —
-    the knob that tolerates allow-invalid partitions returning nothing)."""
+    the knob that tolerates allow-invalid partitions returning nothing).
+
+    ``max_rows_per_partition`` caps what ``fn`` sees: a larger partition is
+    down-sampled (seeded, so reruns agree) before ``fn`` runs — the bound
+    the O(n^2) kNN estimators need. This is the one
+    ``groupBy(rand).applyInPandas`` stage of the MI estimators."""
     import numpy as np
 
     tagged = df.withColumn("__part", (F.rand(seed) * num_partitions).cast("int"))
 
     def runner(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        stats = fn(pdf.drop(columns="__part"))
+        pdf = pdf.drop(columns="__part")
+        if max_rows_per_partition is not None and len(pdf) > max_rows_per_partition:
+            pdf = pdf.sample(n=max_rows_per_partition, random_state=0)
+        stats = fn(pdf)
         return pd.DataFrame(
             {"part": [key[0]] * len(stats), "stat": list(stats), "value": list(stats.values())}
         )

@@ -132,6 +132,55 @@ def test_check_uniqueness_multicol_no_concat_collision(spark):
     assert v[0]["detail"] == "2" and v[0]["row_key"].startswith("d")
 
 
+def test_check_uniqueness_null_keys_group_as_one(spark):
+    # NULLs are equal keys (not SQL UNIQUE's NULLs-distinct): >=2 NULL keys
+    # are one "<null>" DUPLICATE_KEY, as DuckDB's GROUP BY groups them.
+    import duckdb
+
+    keys = ["a", None, "b", None, "a", None, "c"]
+    df = spark.createDataFrame([(k,) for k in keys], "k string")
+    got = sorted(
+        (r["row_key"], r["anomaly_type"], r["detail"])
+        for r in check_uniqueness(df, "k").collect()
+    )
+    assert got == [("<null>", "DUPLICATE_KEY", "3"), ("a", "DUPLICATE_KEY", "2")]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (k VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?)", [(k,) for k in keys])
+    oracle = con.execute(
+        "SELECT coalesce(k, '<null>'), 'DUPLICATE_KEY', CAST(count(*) AS VARCHAR) "
+        "FROM t GROUP BY k HAVING count(*) > 1"
+    ).fetchall()
+    assert got == sorted(oracle)
+
+
+def test_check_referential_null_child_keys_are_orphans(spark):
+    # Every NULL child key is an orphan (not FK MATCH SIMPLE, where a NULL FK
+    # is satisfied), even with a NULL key on the parent side: the same rows
+    # as the NOT EXISTS oracle.
+    import duckdb
+
+    child_keys = [1, None, 2, None, 5]
+    parent_keys = [1, 2, None]
+    child = spark.createDataFrame([(k,) for k in child_keys], "fk int")
+    parent = spark.createDataFrame([(k,) for k in parent_keys], "pk int")
+    got = sorted(
+        (r["row_key"] is None, r["row_key"] or "")
+        for r in check_referential(child, "fk", parent, "pk").collect()
+    )
+    assert got == [(False, "5"), (True, ""), (True, "")]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE child (fk INTEGER)")
+    con.execute("CREATE TABLE parent (pk INTEGER)")
+    con.executemany("INSERT INTO child VALUES (?)", [(k,) for k in child_keys])
+    con.executemany("INSERT INTO parent VALUES (?)", [(k,) for k in parent_keys])
+    oracle = con.execute(
+        "SELECT CAST(fk AS VARCHAR) FROM child c "
+        "WHERE NOT EXISTS (SELECT 1 FROM parent p WHERE p.pk = c.fk)"
+    ).fetchall()
+    assert got == sorted((k is None, k or "") for (k,) in oracle)
+
+
 def test_check_referential(spark):
     images = images_df(spark, 1000, "clean", partitions=2)
     ref = ref_captions_df(spark, 1000, partitions=2)

@@ -4,7 +4,8 @@
 The repo's estimator reimplements sklearn's ``mutual_info_regression`` /
 ``mutual_info_classif`` (KSG / Ross / contingency plug-in, sklearn's
 scale-and-noise pipeline with a seeded RandomState), so the reference's
-sklearn-derived goldens reproduce bit-for-bit; asserted at 1e-6.
+sklearn-derived goldens reproduce to floating-point rounding; asserted at
+1e-6.
 """
 
 import numpy as np
@@ -124,6 +125,19 @@ def test_mi_classif_with_categorical_all_unique_labels():
     # A fully-unique categorical memorizes shuffled labels equally well, so
     # AMI cancels to exactly 0 while raw MI reads the full label entropy.
     _assert_stats(out, "unique_feat_array", 1.0900597, 0.0, 0.0)
+
+
+def test_mi_classif_with_all_singleton_categorical_labels():
+    # Every label value occurs once: the Ross estimator has no label with a
+    # neighbor to count, and sklearn's answer (kept here) is MI = 0.
+    pdf = pd.DataFrame(
+        {
+            "label_key": [f"L{i}" for i in range(11)],
+            "numeric_feature": [0.3, 1.2, 0.7, 2.5, 1.1, 0.2, 3.3, 0.9, 1.8, 2.2, 0.4],
+        }
+    )
+    out = _compute(pdf, categorical={"label_key"})
+    assert out["numeric_feature"] == {MI: 0.0, AMI: 0.0, NAMI: 0.0}
 
 
 def test_mi_classif_categorical_label_small_sample():
