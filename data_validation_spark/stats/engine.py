@@ -118,6 +118,7 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
         E.QUANTILE_CUTS,
         options.quantiles_accuracy,
         options.num_values_histogram_buckets,
+        options.hll_precision,
     )
 
     def wide_job():
@@ -127,7 +128,8 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
         # ALL binary-column stats (presence, lengths, HLL unique, format
         # sniff) run as their own concurrent job over a codegen'd projection
         # of the payload (see exprs.build_agg_exprs docstring): the
-        # imperative HLL would disable codegen in the wide agg, and with the
+        # hll_sketch_agg unique (a TypedImperativeAggregate) would force the
+        # wide agg into ObjectHashAggregate without codegen, and with the
         # binary stats isolated the wide agg's scan skips the binary column
         # entirely — each column is still read exactly once across the pass.
         if not bytes_exprs:

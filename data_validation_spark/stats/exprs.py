@@ -24,6 +24,8 @@ from typing import Optional
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_validation_spark.stats.options import StatsOptions
+
 # Statistics-type lattice, cf. reference stats_util.py:80-120 (Arrow types
 # collapse to INT / FLOAT / STRING / STRUCT; BYTES only ever asserted).
 INT = "INT"
@@ -137,8 +139,9 @@ def build_agg_exprs(
     num_quantile_cuts: int,
     quantiles_accuracy: int,
     count_values_hist_buckets: int,
-) -> tuple[list, list]:
-    """Aggregate expressions for the wide pass, split into two lists:
+    hll_precision: int = StatsOptions.hll_precision,
+) -> tuple[list, list, list]:
+    """Aggregate expressions for the wide pass, split into three lists:
 
     ``(main, quantile, bytes_unique)`` — ``quantile`` holds the
     ``percentile_approx`` expressions (numeric quantile grids + num-values
@@ -153,19 +156,21 @@ def build_agg_exprs(
     ``bytes_unique`` is ``(proj_exprs, agg_exprs)`` carrying ALL the
     binary-column statistics (presence, byte-length stats, distinct-count
     estimate, magic-byte format counters). They leave the main agg for two
-    reasons: (1) ``approx_count_distinct`` (HLL++) is an ImperativeAggregate,
-    and one in the main agg disables whole-stage codegen for EVERY expression
-    in it — measured 2-3× on a table with a large binary column; (2) with the
-    binary stats isolated, the main agg's scan no longer reads the binary
-    column at all. The caller projects ``proj_exprs`` (content hash, length,
-    sniffed format — codegen'd, so the multi-KB payload is touched exactly
-    once in compiled code) and aggregates ``agg_exprs`` over the projection
-    in its own job; the binary column is read exactly ONCE across the whole
-    stats pass, and only a cheap scalar-input aggregate runs interpreted.
-    All aggregates here are order-independent (counts, min/max, HLL
-    registers, and byte-length sums are integer-valued doubles « 2^53, i.e.
-    exact under any summation order), so the job may re-split an
-    under-split input.
+    reasons: (1) the distinct-count estimate is DataSketches
+    ``hll_sketch_agg`` at lgK ``hll_precision`` — the same sketch sketch-mode
+    string uniques use — and, as a TypedImperativeAggregate, one in the main
+    agg would force it into ``ObjectHashAggregateExec`` with no whole-stage
+    codegen for ANY expression in it (measured 2-3× on a table with a large
+    binary column); (2) with the binary stats isolated, the main agg's scan
+    no longer reads the binary column at all. The caller projects
+    ``proj_exprs`` (content hash, length, sniffed format — codegen'd, so the
+    multi-KB payload is touched exactly once in compiled code) and
+    aggregates ``agg_exprs`` over the projection in its own job; the binary
+    column is read exactly ONCE across the whole stats pass, and only a
+    cheap scalar-input aggregate runs interpreted. All aggregates here are
+    order-independent (counts, min/max, HLL sketch unions, and byte-length
+    sums are integer-valued doubles « 2^53, i.e. exact under any summation
+    order), so the job may re-split an under-split input.
 
     Returns aliased expressions; assembly decodes by alias convention
     ``{plan.alias}__{stat}``.
@@ -213,11 +218,15 @@ def build_agg_exprs(
                 F.avg(F.col(blen_col)).alias(f"{a}__avglen"),
                 F.min(F.col(blen_col)).alias(f"{a}__minbytes"),
                 F.max(F.col(blen_col)).alias(f"{a}__maxbytes"),
-                # HLL++ distinct estimate on a 64-bit content hash — one-pass,
-                # no expand; the reference estimates bytes uniques with a KMV
-                # sketch too. xxhash64(NULL) is non-null → gated on presence
-                # in the projection.
-                F.approx_count_distinct(F.col(h_col), 0.01).alias(f"{a}__unique"),
+                # DataSketches HLL distinct estimate on a 64-bit content hash
+                # (~0.8% RSE at lgK 14), the sketch sketch-mode string uniques
+                # use; approx_count_distinct at rsd 0.01 costs ~1 s per query
+                # at any input size. The reference estimates bytes uniques
+                # with a KMV sketch too. xxhash64(NULL) is non-null → gated on
+                # presence in the projection; the sketch ignores the NULLs.
+                F.hll_sketch_estimate(
+                    F.hll_sketch_agg(F.col(h_col), hll_precision)
+                ).alias(f"{a}__unique"),
             ]
             pw = _w(p)
             if pw:

@@ -145,6 +145,26 @@ def test_bytes_stats(spark):
     assert fs.bytes.unique == 2
 
 
+def test_bytes_unique_accuracy(spark):
+    """Bytes ``unique`` is an HLL estimate over a content hash: within 2% of
+    the exact distinct count at a few thousand payloads spread over several
+    partitions (duplicates and NULLs included), and the same number in exact
+    and sketch mode."""
+    rows = [
+        (bytes(f"payload-{i:05d}-", "ascii") * (1 + i % 7),)
+        for i in range(3000)
+        for _ in range(1 + i % 3)
+    ] + [(None,)] * 250
+    df = spark.createDataFrame(rows, "b binary").repartition(3)
+    assert df.rdd.getNumPartitions() >= 2
+    exact = len({r[0] for r in rows if r[0] is not None})
+    assert exact == 3000
+    unique = compute_statistics(df).default_slice().feature("b").bytes.unique
+    assert abs(unique - exact) <= 0.02 * exact, unique
+    sk = compute_statistics(df, StatsOptions(use_sketches=True))
+    assert sk.default_slice().feature("b").bytes.unique == unique
+
+
 def test_empty_input(spark):
     df = spark.createDataFrame([], "x double, s string")
     stats = compute_statistics(df)
@@ -425,3 +445,15 @@ def test_stats_options_validation_goldens():
     # valid edges accepted
     StatsOptions(sample_rate=1.0, semantic_domain_sample_rate=0.5,
                  num_values_histogram_buckets=2, num_histogram_buckets=1)
+
+
+def test_stats_options_rejects_hll_precision_outside_lg_k_range():
+    """hll_precision is the lgConfigK of every DataSketches HLL the engine
+    runs (bytes uniques in both modes, string uniques in sketch mode); an
+    out-of-range value fails at construction, naming the field, not inside
+    a concurrent Spark job."""
+    for bad in (3, 22, 0, -1):
+        with pytest.raises(ValueError, match=f"Invalid hll_precision {bad}"):
+            StatsOptions(hll_precision=bad)
+    assert StatsOptions(hll_precision=4).hll_precision == 4
+    assert StatsOptions(hll_precision=21).hll_precision == 21

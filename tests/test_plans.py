@@ -91,14 +91,22 @@ def test_wide_agg_is_partial_final(spark, sf_dir):
     assert plan.count("+- Exchange") == 1  # exactly one shuffle in the tree
 
 
+def _final_agg_calls(plan: str, fn: str) -> int:
+    """Number of ``fn(...)`` calls in the final (non-``partial_``) aggregate
+    ``Functions`` lines of a formatted plan."""
+    lines = [ln for ln in plan.splitlines() if ln.startswith("Functions")]
+    return sum(len(re.findall(rf"(?<!\w){fn}\(", ln)) for ln in lines)
+
+
 def test_bytes_stats_stay_out_of_codegen_agg(spark, tmp_path):
-    """Binary-column stats must not ride the main wide agg: the HLL++
-    distinct estimator is an ImperativeAggregate and one imperative function
-    disables whole-stage codegen for EVERY expression in the aggregate
-    (measured 2-3× on a table with a large binary column). All bytes stats
-    run in a dedicated job over a codegen'd projection of the payload, so
-    the wide agg's scan does not read the binary column at all and the
-    payload is still read exactly once across the pass."""
+    """Binary-column stats must not ride the main wide agg: the distinct
+    estimate is a DataSketches ``hll_sketch_agg``, a TypedImperativeAggregate
+    that forces the whole aggregate into ObjectHashAggregate, i.e. no
+    whole-stage codegen for ANY expression in it (measured 2-3× on a table
+    with a large binary column). All bytes stats run in a dedicated job over
+    a codegen'd projection of the payload, so the wide agg's scan does not
+    read the binary column at all and the payload is still read exactly
+    once across the pass."""
     from data_validation_spark.stats import exprs as E
     from data_validation_spark.stats.engine import compute_statistics
     from data_validation_spark.stats.options import StatsOptions
@@ -113,11 +121,21 @@ def test_bytes_stats_stay_out_of_codegen_agg(spark, tmp_path):
     plans = E.classify_columns(df.schema, set())
     aggs, _qaggs, baggs = E.build_agg_exprs(plans, None, 100, 1000, 10)
     main_plan = plan_of(df.groupBy().agg(*aggs))
-    assert "approx_count_distinct" not in main_plan
+    assert "hll_sketch_agg" not in main_plan
+    assert "ObjectHashAggregate" not in main_plan
     # wide agg's parquet scan must not read the payload column at all
     m = re.search(r"ReadSchema: struct<([^>]*)>", main_plan)
     assert m and "payload" not in m.group(1), main_plan
     assert len(baggs) == 1
+    # the bytes job (as engine.bytes_job builds it) holds the one HLL
+    projs = [pe for proj, _ in baggs for pe in proj]
+    bagg = [ae for _, agg in baggs for ae in agg]
+    bytes_plan = plan_of(
+        df.select(F.lit("All Examples").alias("slice_key"), *projs)
+        .groupBy("slice_key")
+        .agg(*bagg)
+    )
+    assert _final_agg_calls(bytes_plan, "hll_sketch_agg") == 1, bytes_plan
     # the engine still reports full bytes stats (50 distinct 10-byte payloads)
     stats = compute_statistics(df, StatsOptions())
     bs = stats.default_slice().feature("payload").bytes
@@ -125,6 +143,36 @@ def test_bytes_stats_stay_out_of_codegen_agg(spark, tmp_path):
     assert bs.min_num_bytes == 10 and bs.max_num_bytes == 10
     assert stats.default_slice().feature("payload").common.num_non_missing == 50
     assert stats.default_slice().feature("payload").common.num_missing == 1
+
+
+def test_binary_column_stats_plans_have_no_approx_count_distinct(spark, tmp_path):
+    """Bytes uniques use the same DataSketches HLL as sketch-mode string
+    uniques, in both modes: no executed plan of a ``compute_statistics`` run
+    on a binary column holds HLL++ ``approx_count_distinct``, and every HLL
+    runs at ``StatsOptions.hll_precision``."""
+    from data_validation_spark.stats.engine import compute_statistics
+    from data_validation_spark.stats.options import StatsOptions
+
+    df = spark.range(300).select(
+        F.when(F.col("id") % 10 != 0, F.encode((F.col("id") % 40).cast("string"), "utf-8"))
+        .alias("b"),
+        F.concat(F.lit("v"), (F.col("id") % 7).cast("string")).alias("s"),
+    )
+    p = str(tmp_path / "bin.parquet")
+    df.write.parquet(p)
+    src = spark.read.parquet(p)
+    for use_sketches in (False, True):
+        stats, plans = _sql_executions(spark, lambda: compute_statistics(
+            src, StatsOptions(use_sketches=use_sketches, hll_precision=12)))
+        assert stats.default_slice().feature("b").bytes.unique == 36
+        assert plans
+        assert not any("approx_count_distinct" in pl for pl in plans), use_sketches
+        # the bytes job, plus the long pass's string uniques in sketch mode
+        assert sum("hll_sketch_agg" in pl for pl in plans) == (
+            2 if use_sketches else 1
+        ), plans
+        lg_ks = {k for pl in plans for k in re.findall(r"hll_sketch_agg\([^,]+, (\d+)", pl)}
+        assert lg_ks == {"12"}, lg_ks
 
 
 def test_embedding_topk_broadcasts_query(spark, sf_dir):
