@@ -52,39 +52,29 @@ def train_centroids(
     ``df.count()`` is a full extra scan wave before training (at corpus
     scale that doubles the sampling cost). So: with ``row_count_hint``
     (e.g. from catalog/table statistics) the fraction is computed without
-    any counting; without a hint, a cheap ``limit(sample+1)`` probe (early
-    terminating — reads only enough partitions) detects the ≤``sample``
-    case and uses those rows directly — one action total, bit-identical
-    centroids to the counted path (both see all rows in frame order). Only
-    an unhinted input larger than ``sample`` falls back to count+sample.
+    any counting; without a hint, a ``limit(sample+1)`` count probe (each
+    scan task stops after ``sample+1`` rows and no column is read) detects
+    the ≤``sample`` case, where the fraction is 1 and the draw is every row
+    in frame order — the same rows, and bit-identical centroids, as the
+    hinted path. Only an unhinted input larger than ``sample`` also runs
+    the full count.
     """
     if row_count_hint is None:
-        probe = df.select(vec_col).limit(sample + 1).toPandas()[vec_col].tolist()
-        if len(probe) == 0:
-            raise ValueError("cannot train centroids on an empty DataFrame")
-        if len(probe) <= sample:
-            rows = probe
-        else:
+        n_total = df.limit(sample + 1).count()
+        if n_total > sample:
             n_total = df.count()
-            frac = min(1.0, (sample * 1.2) / n_total)
-            rows = (
-                df.select(vec_col)
-                .sample(withReplacement=False, fraction=frac, seed=seed)
-                .limit(sample)
-                .toPandas()[vec_col]
-                .tolist()
-            )
     else:
-        if row_count_hint == 0:
-            raise ValueError("cannot train centroids on an empty DataFrame")
-        frac = min(1.0, (sample * 1.2) / row_count_hint)
-        rows = (
-            df.select(vec_col)
-            .sample(withReplacement=False, fraction=frac, seed=seed)
-            .limit(sample)
-            .toPandas()[vec_col]
-            .tolist()
-        )
+        n_total = row_count_hint
+    if n_total == 0:
+        raise ValueError("cannot train centroids on an empty DataFrame")
+    frac = min(1.0, (sample * 1.2) / n_total)
+    rows = (
+        df.select(vec_col)
+        .sample(withReplacement=False, fraction=frac, seed=seed)
+        .limit(sample)
+        .toPandas()[vec_col]
+        .tolist()
+    )
     if not rows:  # tiny inputs where the Bernoulli draw came up empty
         rows = df.select(vec_col).limit(sample).toPandas()[vec_col].tolist()
     x = np.array(rows, dtype=np.float32)

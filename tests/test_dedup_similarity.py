@@ -15,6 +15,7 @@ from data_validation_spark.dedup.embedding import cosine_pairs_bruteforce, cosin
 from data_validation_spark.similarity import (
     cosine_topk_bruteforce,
     cosine_topk_ivf,
+    train_centroids,
 )
 
 
@@ -145,6 +146,24 @@ def test_similarity_topk(vectors):
     res = cosine_topk_bruteforce(vectors, "vec_id", "embedding", [(0, q)], k=3).collect()
     assert [r["id"] for r in res] == [0, 101, 100]
     assert res[0]["cosine"] == pytest.approx(1.0)
+
+
+def test_train_centroids_unhinted_probe(vectors):
+    # Up to ``sample`` rows, the count probe leaves the Bernoulli fraction at
+    # 1: the unhinted path draws every row in frame order, as the hinted one.
+    n = vectors.count()
+    for sample in (n, 2 * n):
+        unhinted = train_centroids(vectors, "embedding", num_centroids=4, sample=sample)
+        hinted = train_centroids(vectors, "embedding", num_centroids=4, sample=sample,
+                                 row_count_hint=n)
+        assert unhinted.shape == (4, 16)
+        assert unhinted.tobytes() == hinted.tobytes()
+    # A larger input still trains, from a Bernoulli draw of the counted rows.
+    big = train_centroids(vectors, "embedding", num_centroids=4, sample=n // 2)
+    assert big.shape[1] == 16 and 1 <= len(big) <= 4
+    assert np.allclose(np.linalg.norm(big, axis=1), 1.0, atol=1e-5)
+    with pytest.raises(ValueError, match="empty"):
+        train_centroids(vectors.limit(0), "embedding", sample=10)
 
 
 def test_similarity_ivf_recall(vectors):
